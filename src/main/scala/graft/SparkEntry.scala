@@ -272,8 +272,8 @@ object SparkEntry {
     * ≡ offset mod stride), satisfying the groupCentroidsByTop contract. The
     * 8× ratio is the bench-scale stand-in for sqrt(nlist): what matters is
     * that BOTH tiers stay broadcast-small while the full centroid relation
-    * flows through the shuffle join (see graft.AssignSweep for the
-    * cost-vs-nlist evidence). */
+    * flows through the shuffle join (cost-vs-nlist evidence: docs/PLANS.md
+    * "Two-tier IVF coarse quantizer (s2b)"). */
   private def ivfCentroidSets(e: DataFrame, stride: Long,
                               offset: Long = 0L): (DataFrame, DataFrame) = {
     val cent = e.filter(col("vec_id") % stride === offset)
@@ -5684,7 +5684,7 @@ object SparkEntry {
       val init = e.filter(col("vec_id") % Adaptive.centroidStride(e.count()) === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
       SimilarityOps.kmeansRefine(e, init, "vec_id", "embedding", iters = 2,
-          dims = PqM * PqSubDim) // emb fixture width — fixed 64
+          dims = EmbDim)
         .select(col("centroid_id"), col("n"),
           concat_ws(",", transform(col("centroid_vec"),
             x => format_string("%.4f", x))).as("centroid_enc"))
@@ -5700,7 +5700,7 @@ object SparkEntry {
       val init = e.filter(col("vec_id") % Adaptive.centroidStride(e.count()) === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
       val trained = SimilarityOps.kmeansRefine(e, init, "vec_id", "embedding",
-          iters = 2, dims = PqM * PqSubDim) // emb fixture width — fixed 64
+          iters = 2, dims = EmbDim)
         .select(col("centroid_id"), col("centroid_vec"))
       SimilarityOps.semDedup(e, trained, "vec_id", "embedding", tau = 0.35)
     }),
@@ -9327,6 +9327,11 @@ object SparkEntry {
     * both the Spark queries and the oracle SQL generator. */
   private val PqM = 8
   private val PqSubDim = 8
+
+  /** Width of every `embeddings.embedding` fixture vector — the `dims` of
+    * the fixed-width k-means rows (s8, sd1). */
+  private val EmbDim = 64
+  require(PqM * PqSubDim == EmbDim, "PQ shape must tile the embedding width")
 
   /** Lloyd iterations for the trained-codebook gate (s7e). Chosen by a
     * measured 20-query recall ladder (100 ground-truth slots) at all three

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.store.KeyedParquetTable
 import graft.streaming.{Pipeline, SourceAdapters}
@@ -18,12 +17,7 @@ object StreamBench {
     val envPerSec = args.headOption.map(_.toInt).getOrElse(200)
     val txsPerEnv = args.lift(1).map(_.toInt).getOrElse(50)
     val seconds = args.lift(2).map(_.toInt).getOrElse(30)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     val tmp = java.nio.file.Files.createTempDirectory("streambench")

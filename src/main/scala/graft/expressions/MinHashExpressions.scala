@@ -35,7 +35,6 @@ object MinHashRuntime {
   private val Md5 = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
-  private val HexDigits = "0123456789abcdef".toCharArray
 
   /** Spark's `trim`: leading/trailing 0x20 space characters only. */
   private def trimSpaces(s: String): String = {
@@ -53,20 +52,6 @@ object MinHashRuntime {
     val v = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
       ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
     v % DedupOps.MinhashP
-  }
-
-  /** md5 hex digest of a string (full 32 chars) — shared by fingerprint-
-    * style helpers and tests. */
-  def md5Hex(s: String): String = {
-    val d = Md5.get().digest(s.getBytes(StandardCharsets.UTF_8))
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = HexDigits((d(i) >> 4) & 0xf)
-      out(2 * i + 1) = HexDigits(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
   }
 
   private def fold(mins: Array[Long], shingle: String, a: Array[Long],

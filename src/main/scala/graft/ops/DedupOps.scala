@@ -832,9 +832,14 @@ object DedupOps {
     // r14 opt (guide §1.2): LAZY checkpoints throughout this loop — the
     // labelSum action that follows every checkpoint materializes the
     // blocks in the SAME job, so each round (and the init) runs one
-    // driver-synchronized job instead of two (eager ckpt + sum). Plan
-    // truncation is unchanged (the Dataset is LogicalRDD-backed either
-    // way); only the final-stage materialization fuses with the sum.
+    // driver-synchronized job instead of two (eager ckpt + sum). The plan
+    // is cut either way (each Dataset is LogicalRDD-backed). The RDD
+    // lineage is not: with the default
+    // spark.checkpoint.checkpointAllMarkedAncestors=false an action
+    // finalizes only the LAST marked RDD in its lineage, so an ancestor
+    // such as `edges` never completes its local checkpoint. It stays a
+    // persisted (MEMORY_AND_DISK) RDD with live lineage, and an evicted
+    // block is recomputed from `pairs` rather than lost.
     val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
       .distinct().localCheckpoint(eager = false)

@@ -287,12 +287,13 @@ object SimilarityOps {
   //
   // Per-row cost: nlist1 + probeTop·(nlist/nlist1) ≈ 2·sqrt(nlist) instead
   // of nlist — FLAT in nlist for fixed nlist1 ratio (sweep-verified, see
-  // graft.AssignSweep). Approximation contract: a vector's candidate set is
-  // the centroids of its probeTop nearest top cells; with probeTop = nlist1
-  // the candidate set is every centroid and the result is IDENTICAL to the
-  // flat assign (same tie-break). With probeTop < nlist1 a vector whose
-  // true nearest centroid lives outside its probed top cells may assign
-  // differently — standard hierarchical-IVF recall behavior.
+  // docs/PLANS.md "Two-tier IVF coarse quantizer (s2b)"). Approximation
+  // contract: a vector's candidate set is the centroids of its probeTop
+  // nearest top cells; with probeTop = nlist1 the candidate set is every
+  // centroid and the result is IDENTICAL to the flat assign (same
+  // tie-break). With probeTop < nlist1 a vector whose true nearest
+  // centroid lives outside its probed top cells may assign differently —
+  // standard hierarchical-IVF recall behavior.
 
   /** Route each row of `rows` to its `probeTop` nearest top-level cells:
     * (idCol, vecCol, __v, top_id), probeTop rows per input row.
@@ -619,10 +620,21 @@ object SimilarityOps {
         // decimal accumulations over identical value sets and the same
         // double division, so the centroids are bit-identical; `n` equals
         // the per-dim count because every vector carries every dim.
-        val v = col(vecCol).cast("array<double>")
+        // A vector of another width must not reach the per-dim sums: with
+        // dims > width they read nulls (an index error under ANSI), with
+        // dims < width they drop its tail. It fails the task here, in the
+        // aggregation input, with no extra job.
+        val width = size(col(vecCol))
+        val v = col("v")
         val aggs = count(lit(1)).as("n") +: (0 until dims).map(d =>
           sum(v(d).cast("decimal(30,10)")).cast("double").as(s"sx$d"))
-        assigned.groupBy(col("centroid_id"))
+        assigned
+          .select(col("centroid_id"),
+            when(width =!= dims, raise_error(concat(
+                lit(s"kmeansRefine: $vecCol width "), width.cast("string"),
+                lit(s" != dims $dims"))))
+              .otherwise(col(vecCol).cast("array<double>")).as("v"))
+          .groupBy(col("centroid_id"))
           .agg(aggs.head, aggs.tail: _*)
           .select(col("centroid_id"),
             array((0 until dims).map(d => col(s"sx$d") / col("n")): _*)

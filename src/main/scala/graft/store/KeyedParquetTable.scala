@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
   * [[compact]] which also collapses versions per partition.
   */
 class KeyedParquetTable(val path: String, val keyCol: String,
-                        val versionCol: String = "event_time",
-                        val partitioned: Boolean = true) extends Serializable {
+                        val versionCol: String = "event_time") extends Serializable {
 
   /** Partition columns derived from the key (the reference keys by a
     * "yyyy-MM-dd HH:mm:ss" minute string and lays out y/m/d/h prefixes). */
@@ -47,23 +46,36 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     df.repartition(n, (Seq("year", "month", "day", "hour") ++ extra).map(col): _*)
   }
 
+  /** Dynamic partition overwrite: replaces exactly the hour directories
+    * `df` has rows for, then restores the session's overwrite mode. */
+  private def overwriteHourDirs(spark: SparkSession, df: DataFrame): Unit = {
+    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try {
+      df.write.mode(SaveMode.Overwrite)
+        .partitionBy("year", "month", "day", "hour").parquet(path)
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      }
+    }
+  }
+
   /** S6 — upsert a batch: append new versions; readers resolve latest-wins.
     * Used directly as a `foreachBatch` sink for streaming update-mode aggs.
     * @param version monotonic sequence (e.g. the streaming batchId) breaking
     *   ties when two upserts of the same key share an `event_time` second —
     *   the reference's "last put_record wins" needs a total order. */
   def upsert(batch: DataFrame, version: Long = 0L, bulk: Boolean = false): Unit = {
-    val stamped = batch.withColumn("__v", lit(version))
-    val w = if (partitioned) {
-      val p = withPartitionCols(stamped)
-      // bulk (backfill) loads: co-locate each hour partition into one task so
-      // the append writes one file per directory instead of one per task —
-      // streaming micro-batches skip this (few open windows, extra shuffle
-      // not worth it; compact() collapses their small files on cadence)
-      val arranged = if (bulk) byPartitionDirs(p) else p
-      arranged.write.partitionBy("year", "month", "day", "hour")
-    } else stamped.write
-    w.mode(SaveMode.Append).parquet(path)
+    val p = withPartitionCols(batch.withColumn("__v", lit(version)))
+    // bulk (backfill) loads: co-locate each hour partition into one task so
+    // the append writes one file per directory instead of one per task —
+    // streaming micro-batches skip this (few open windows, extra shuffle
+    // not worth it; compact() collapses their small files on cadence)
+    val arranged = if (bulk) byPartitionDirs(p) else p
+    arranged.write.partitionBy("year", "month", "day", "hour")
+      .mode(SaveMode.Append).parquet(path)
   }
 
   /** All raw reads go through mergeSchema: tombstone files ([[deleteKeys]])
@@ -74,6 +86,10 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * is the equivalent, paid in footer metadata only. */
   private def readRaw(spark: SparkSession): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
+
+  /** [[readRaw]] without the y/m/d/h partition columns. */
+  private def readRows(spark: SparkSession): DataFrame =
+    readRaw(spark).drop("year", "month", "day", "hour")
 
   private def latestOnly(df: DataFrame, keepVersion: Boolean = false,
                          dropTombstones: Boolean = true): DataFrame = {
@@ -108,9 +124,7 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * preserve winning tombstones (dropping one would let a replayed old
     * batch win against a vanished delete). */
   def deleteKeys(spark: SparkSession, keys: DataFrame, version: Long): Unit = {
-    val drop = Seq("__v", "__del") ++
-      (if (partitioned) Seq("year", "month", "day", "hour") else Nil)
-    val dataSchema = readRaw(spark).drop(drop: _*).schema
+    val dataSchema = readRows(spark).drop("__v", "__del").schema
     val keyField = dataSchema(keyCol)
     val row = dataSchema.fields.map { f =>
       if (f.name == keyCol) col(keyCol).cast(keyField.dataType).as(f.name)
@@ -125,16 +139,10 @@ class KeyedParquetTable(val path: String, val keyCol: String,
       .exists(new Path(path))
 
   /** S7 — offline full-history scan (all versions, duplicates included). */
-  def readAll(spark: SparkSession): DataFrame = {
-    val df = readRaw(spark).drop("__v")
-    if (partitioned) df.drop("year", "month", "day", "hour") else df
-  }
+  def readAll(spark: SparkSession): DataFrame = readRows(spark).drop("__v")
 
   /** S8/online — latest version per key (version col, then upsert sequence). */
-  def readLatest(spark: SparkSession): DataFrame = {
-    val df = readRaw(spark)
-    latestOnly(if (partitioned) df.drop("year", "month", "day", "hour") else df)
-  }
+  def readLatest(spark: SparkSession): DataFrame = latestOnly(readRows(spark))
 
   /** Time travel: the table state AS OF upsert sequence `version`
     * (inclusive) — latest-wins resolution over only the versions committed
@@ -146,25 +154,20 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * `__v` stats overlap it, not the whole history. Output carries the
     * originating upsert sequence as `version`. */
   def readAsOf(spark: SparkSession, version: Long): DataFrame = {
-    val df = readRaw(spark).filter(col("__v") <= version)
-    val resolved = latestOnly(
-      if (partitioned) df.drop("year", "month", "day", "hour") else df,
-      keepVersion = true)
-    resolved.withColumnRenamed("__v", "version")
+    latestOnly(readRows(spark).filter(col("__v") <= version), keepVersion = true)
+      .withColumnRenamed("__v", "version")
   }
 
   /** S8 — point lookup of the latest record for one key. Partition pruning:
     * the key prefix maps directly to y/m/d/h partition values, so the scan
     * touches exactly one hour partition. */
   def getRecord(spark: SparkSession, key: String): DataFrame = {
-    val base = readRaw(spark)
-    val pruned = if (partitioned)
-      base.filter(col("year") === key.substring(0, 4) &&
+    val pruned = readRaw(spark)
+      .filter(col("year") === key.substring(0, 4) &&
         col("month") === key.substring(5, 7) &&
         col("day") === key.substring(8, 10) &&
         col("hour") === key.substring(11, 13))
-        .drop("year", "month", "day", "hour")
-    else base
+      .drop("year", "month", "day", "hour")
     latestOnly(pruned.filter(col(keyCol) === key))
   }
 
@@ -183,8 +186,7 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * least its winner — so the dynamic overwrite rewrites exactly the
     * directories that exist. */
   def truncateHistory(spark: SparkSession, keepFrom: Long): Unit = {
-    val raw = readRaw(spark)
-    val base = if (partitioned) raw.drop("year", "month", "day", "hour") else raw
+    val base = readRows(spark)
     val versioned =
       if (base.columns.contains("__v")) base else base.withColumn("__v", lit(0L))
     val ord =
@@ -192,61 +194,36 @@ class KeyedParquetTable(val path: String, val keyCol: String,
         Seq(col(versionCol).desc, col("__v").desc)
       else Seq(col("__v").desc)
     val w = Window.partitionBy(col(keyCol)).orderBy(ord: _*)
-    if (partitioned) {
-      // Rewrite ONLY the hour partitions that actually drop rows (r11
-      // verdict task 5): truncation removes exactly the superseded
-      // pre-keepFrom versions, so a partition is affected iff some key in
-      // it has ≥2 rows at __v ≤ keepFrom — and every version of a key
-      // lives in that key's own hour dir (the partition values derive from
-      // the key), so the test is partition-local and EXACT, not
-      // conservative. The detection pass is one scan with the __v bound in
-      // PushedFilters plus a narrow count; the common retention cadence —
-      // truncate more often than history accumulates — then costs a scan,
-      // not a 100% table rewrite (o25's fixture: zero affected partitions,
-      // formerly a full rewrite).
-      val affected = withPartitionCols(versioned.filter(col("__v") <= keepFrom))
-        .groupBy(col("year"), col("month"), col("day"), col("hour"), col(keyCol))
-        .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
-        .select(col("year"), col("month"), col("day"), col("hour"))
-        .distinct().collect() // bounded by #hour partitions, never rows
-      if (affected.isEmpty) return
-      val partsDf = broadcast(spark.createDataFrame(affected.toSeq.map(r =>
-          (r.getString(0), r.getString(1), r.getString(2), r.getString(3))))
-        .toDF("year", "month", "day", "hour"))
-      // winners are computed over the affected partitions only — correct
-      // because the per-key window never crosses an hour-dir boundary
-      val scoped = withPartitionCols(versioned)
-        .join(partsDf, Seq("year", "month", "day", "hour"))
-        .drop("year", "month", "day", "hour")
-      val oldWinners = scoped.filter(col("__v") <= keepFrom)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      val keep = oldWinners.unionByName(scoped.filter(col("__v") > keepFrom))
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        byPartitionDirs(withPartitionCols(keep))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("year", "month", "day", "hour").parquet(path)
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-      }
-    } else {
-      val oldWinners = versioned.filter(col("__v") <= keepFrom)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      val keep = oldWinners.unionByName(versioned.filter(col("__v") > keepFrom))
-      // unpartitioned: no per-directory overwrite to lean on — write the
-      // keep-set beside the table, then swap directories
-      val fs = fileSystem(spark)
-      val tmp = new Path(path + "__truncate_tmp")
-      keep.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      fs.delete(new Path(path), true)
-      fs.rename(tmp, new Path(path))
-    }
+    // Rewrite ONLY the hour partitions that actually drop rows (r11
+    // verdict task 5): truncation removes exactly the superseded
+    // pre-keepFrom versions, so a partition is affected iff some key in
+    // it has ≥2 rows at __v ≤ keepFrom — and every version of a key
+    // lives in that key's own hour dir (the partition values derive from
+    // the key), so the test is partition-local and EXACT, not
+    // conservative. The detection pass is one scan with the __v bound in
+    // PushedFilters plus a narrow count; the common retention cadence —
+    // truncate more often than history accumulates — then costs a scan,
+    // not a 100% table rewrite (o25's fixture: zero affected partitions,
+    // formerly a full rewrite).
+    val affected = withPartitionCols(versioned.filter(col("__v") <= keepFrom))
+      .groupBy(col("year"), col("month"), col("day"), col("hour"), col(keyCol))
+      .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
+      .select(col("year"), col("month"), col("day"), col("hour"))
+      .distinct().collect() // bounded by #hour partitions, never rows
+    if (affected.isEmpty) return
+    val partsDf = broadcast(spark.createDataFrame(affected.toSeq.map(r =>
+        (r.getString(0), r.getString(1), r.getString(2), r.getString(3))))
+      .toDF("year", "month", "day", "hour"))
+    // winners are computed over the affected partitions only — correct
+    // because the per-key window never crosses an hour-dir boundary
+    val scoped = withPartitionCols(versioned)
+      .join(partsDf, Seq("year", "month", "day", "hour"))
+      .drop("year", "month", "day", "hour")
+    val oldWinners = scoped.filter(col("__v") <= keepFrom)
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+    val keep = oldWinners.unionByName(scoped.filter(col("__v") > keepFrom))
+    overwriteHourDirs(spark, byPartitionDirs(withPartitionCols(keep)))
   }
 
   /** S9/O6 — per-partition compaction, the reference's hourly Glue job
@@ -272,7 +249,7 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     def leafDirs(p: Path, depth: Int): Seq[Path] =
       if (depth == 0) Seq(p)
       else fs.listStatus(p).filter(_.isDirectory).toSeq.flatMap(s => leafDirs(s.getPath, depth - 1))
-    if (!partitioned || !fs.exists(root)) Seq.empty else leafDirs(root, 4)
+    if (!fs.exists(root)) Seq.empty else leafDirs(root, 4)
   }
 
   /** Partition values (year, month, day, hour) of an hour directory, parsed
@@ -302,7 +279,6 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * the same contract: it compacts *previous* hours on a cadence). */
   def compact(spark: SparkSession, targetFileBytes: Long = 512L * 1024 * 1024,
               excludeHourPrefixes: Set[String] = Set.empty): Unit = {
-    if (!partitioned) return
     val fs = fileSystem(spark)
     // discover hour prefixes with >1 file (FeatureStoreAggregateParquet.py:52-58)
     val plan = hourDirs(spark).flatMap { dir =>
@@ -337,18 +313,7 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     // dynamic overwrite replaces the original directories)
     val ready = withPartitionCols(compacted)
       .withColumn("__salt", pmod(xxhash64(col(keyCol)), col("__n")))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      byPartitionDirs(ready, extra = Seq("__salt"))
-        .drop("__salt", "__n")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("year", "month", "day", "hour").parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    overwriteHourDirs(spark,
+      byPartitionDirs(ready, extra = Seq("__salt")).drop("__salt", "__n"))
   }
 }

@@ -16,6 +16,13 @@ class ContractAndSinksSpec extends SparkSpec {
     assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
   }
 
+  test("every Bench maintenance name is a query") {
+    // a renamed maintenance query would otherwise leave the set silently
+    // and be timed as throughput
+    val unknown = Bench.maintenanceQueries -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"not in SparkEntry.queries: $unknown")
+  }
+
   test("raw archive sink persists the unparsed stream verbatim") {
     val input = MemoryStream[String](spark)
     val dir = tmpDir("archive")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.SimilarityOps
 
@@ -47,14 +46,7 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("cosine_sim registers for SQL via GraftExtensions") {
-    val prev = spark // ensure the shared session exists first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate() // same context, fresh session → extensions apply
+    withExtSession { s2 =>
       val r = s2.sql(
         "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS s").head().getDouble(0)
       assert(r === 1.0)
@@ -102,9 +94,6 @@ class ExpressionsSpec extends SparkSpec {
         s2.sql("SELECT simhash32('a', 'b')").collect()
       }
       assert(shArity.getMessage.contains("simhash32"))
-    } finally {
-      SparkSession.setActiveSession(prev)
-      SparkSession.setDefaultSession(prev)
     }
   }
 
@@ -166,21 +155,11 @@ class ExpressionsSpec extends SparkSpec {
       assert(got === expect, s"parts=$parts")
     }
     // registered for SQL via GraftExtensions
-    val prev = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val s2 = org.apache.spark.sql.SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
+    withExtSession { s2 =>
       val r = s2.sql(
         "SELECT topk_vals(v, 2) AS t FROM VALUES (1.0d), (5.0d), (3.0d) AS t(v)")
         .head().getSeq[Double](0)
       assert(r === Seq(5.0, 3.0))
-    } finally {
-      org.apache.spark.sql.SparkSession.setActiveSession(prev)
-      org.apache.spark.sql.SparkSession.setDefaultSession(prev)
     }
   }
 

@@ -45,22 +45,11 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("mink_distinct: SQL surface via GraftExtensions") {
-    import org.apache.spark.sql.SparkSession
-    val prev = spark // ensure the shared session exists first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate() // same context, fresh session → extensions apply
+    withExtSession { s2 =>
       s2.range(20).createOrReplaceTempView("mink_sql_t")
       val got = s2.sql("SELECT mink_distinct(id, 3) AS v FROM mink_sql_t")
         .head().getSeq[Long](0)
       assert(got === Seq(0L, 1L, 2L))
-    } finally {
-      SparkSession.setActiveSession(prev)
-      SparkSession.setDefaultSession(prev)
     }
   }
 

@@ -524,6 +524,26 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("kmeans: fixed-width fast path rejects vectors of another width") {
+    val vecs = (0L until 12L).map { i =>
+      (i, Array.tabulate(4)(d => ((i * 5 + d * 3) % 7).toFloat - 3f))
+    }.toDF("vec_id", "embedding")
+    val init = vecs.filter($"vec_id" % 4 === 0)
+      .select($"vec_id".as("centroid_id"), $"embedding".as("centroid_vec"))
+    def run(dims: Int): Seq[(Long, Seq[Double], Long)] =
+      SimilarityOps.kmeansRefine(vecs, init, "vec_id", "embedding", iters = 2,
+        dims = dims).orderBy($"centroid_id").as[(Long, Seq[Double], Long)]
+        .collect().toSeq
+    for (dims <- Seq(5, 3)) {
+      val e = intercept[Exception](run(dims))
+      assert(e.getMessage.contains(s"embedding width 4 != dims $dims"),
+        e.getMessage)
+    }
+    val spec = SimilarityOps.kmeansRefine(vecs, init, "vec_id", "embedding", iters = 2)
+      .orderBy($"centroid_id").as[(Long, Seq[Double], Long)].collect().toSeq
+    assert(run(4) === spec)
+  }
+
   test("vocabulary: deterministic count-desc/term-asc ids, layout-independent") {
     val docs = Seq((1L, "b a a"), (2L, "c a b"), (3L, "  ")).toDF("doc_id", "text")
     // counts: a=3, b=2, c=1; blank doc contributes nothing

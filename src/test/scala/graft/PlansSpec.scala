@@ -1,26 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Optimizer-rule tier: BoundedTopKRewrite contract. */
 class PlansSpec extends SparkSpec {
-
-  private def withExtSession[A](f: SparkSession => A): A = {
-    val prev = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      f(s)
-    } finally {
-      SparkSession.setActiveSession(prev)
-      SparkSession.setDefaultSession(prev)
-    }
-  }
 
   test("rewrites the slice/sort/collect_list idiom to the bounded aggregate, both sort spellings") {
     withExtSession { s =>
