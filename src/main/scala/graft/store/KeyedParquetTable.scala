@@ -1,7 +1,9 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -83,7 +85,10 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * footer-sampled schema that missed it would silently RESURRECT deleted
     * keys (the latest-wins winner would lose its flag). A table format
     * carries the schema in the manifest; on plain parquet the merged read
-    * is the equivalent, paid in footer metadata only. */
+    * is the equivalent, paid in footer metadata only. The whole-table
+    * reads pay it as a distributed footer job because their file set grows
+    * with the table; [[getRecord]], whose file set is one hour's, merges
+    * the same footers on the driver instead. */
   private def readRaw(spark: SparkSession): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
 
@@ -91,18 +96,27 @@ class KeyedParquetTable(val path: String, val keyCol: String,
   private def readRows(spark: SparkSession): DataFrame =
     readRaw(spark).drop("year", "month", "day", "hour")
 
-  private def latestOnly(df: DataFrame, keepVersion: Boolean = false,
-                         dropTombstones: Boolean = true): DataFrame = {
-    val versioned = if (df.columns.contains("__v")) df else df.withColumn("__v", lit(0L))
-    // Writers that don't stamp an event-time version column still get a
-    // total order from the upsert sequence alone.
+  /** `df` with the upsert sequence `__v`, 0 for rows written without one. */
+  private def withVersion(df: DataFrame): DataFrame =
+    if (df.columns.contains("__v")) df else df.withColumn("__v", lit(0L))
+
+  /** The latest-wins row per key: highest version column, then highest
+    * upsert sequence. Writers that don't stamp an event-time version
+    * column still get a total order from the upsert sequence alone. */
+  private def winners(df: DataFrame): DataFrame = {
+    val versioned = withVersion(df)
     val ord =
       if (versioned.columns.contains(versionCol))
         Seq(col(versionCol).desc, col("__v").desc)
       else Seq(col("__v").desc)
     val w = Window.partitionBy(col(keyCol)).orderBy(ord: _*)
-    val resolved = versioned.withColumn("__rn", row_number().over(w))
+    versioned.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
+  }
+
+  private def latestOnly(df: DataFrame, keepVersion: Boolean = false,
+                         dropTombstones: Boolean = true): DataFrame = {
+    val resolved = winners(df)
     // a winning tombstone means the key is deleted from the SERVED state;
     // maintenance passes (compact) keep the row so a replayed old upsert
     // can never out-version a vanished delete
@@ -158,17 +172,37 @@ class KeyedParquetTable(val path: String, val keyCol: String,
       .withColumnRenamed("__v", "version")
   }
 
-  /** S8 — point lookup of the latest record for one key. Partition pruning:
-    * the key prefix maps directly to y/m/d/h partition values, so the scan
-    * touches exactly one hour partition. */
+  /** S8 — point lookup of the latest record for one key, as ONE narrow
+    * Spark job. Every version of a key lives in the hour directory its
+    * "yyyy-MM-dd HH" prefix names, so the lookup lists that directory,
+    * merges the footers of exactly the listed files on the driver (the
+    * merge `mergeSchema` computes, so a tombstone's `__del` column is never
+    * dropped; [[readRaw]] says why whole-table reads merge in a job
+    * instead) and scans the same list: a file appended after the listing
+    * is in neither, so it is never read without its `__del` column. The
+    * key's few versions are coalesced into one partition, so the
+    * latest-wins window needs no shuffle.
+    *
+    * Contract: a hit returns the columns of its own hour's files. For a
+    * table whose upserts all share one schema (every table graft writes)
+    * that is exactly [[readLatest]]'s column set. A miss (no parquet file
+    * in the hour) returns no rows with [[readLatest]]'s columns, and a
+    * table that does not exist throws, as [[readLatest]] does. */
   def getRecord(spark: SparkSession, key: String): DataFrame = {
-    val pruned = readRaw(spark)
-      .filter(col("year") === key.substring(0, 4) &&
-        col("month") === key.substring(5, 7) &&
-        col("day") === key.substring(8, 10) &&
-        col("hour") === key.substring(11, 13))
-      .drop("year", "month", "day", "hour")
-    latestOnly(pruned.filter(col(keyCol) === key))
+    require(key.take(13).matches("""\d{4}-\d{2}-\d{2} \d{2}"""),
+      s"getRecord key '$key' must start with the 'yyyy-MM-dd HH' prefix " +
+        "the table's year/month/day/hour layout derives from")
+    val hourDir = new Path(path, s"year=${key.substring(0, 4)}/month=${key.substring(5, 7)}" +
+      s"/day=${key.substring(8, 10)}/hour=${key.substring(11, 13)}")
+    val files = parquetFiles(fileSystem(spark), hourDir)
+    GraftParquetBridge.mergedSchema(spark, files) match {
+      case None => latestOnly(readRows(spark).filter(lit(false)))
+      case Some(schema) =>
+        val hour = spark.read.schema(schema).option("basePath", path)
+          .parquet(files.map(_.getPath.toString): _*)
+          .drop("year", "month", "day", "hour")
+        latestOnly(hour.filter(col(keyCol) === key).coalesce(1))
+    }
   }
 
   /** Retention truncation — the VACUUM half of the [[readAsOf]] time-travel
@@ -186,14 +220,7 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * least its winner — so the dynamic overwrite rewrites exactly the
     * directories that exist. */
   def truncateHistory(spark: SparkSession, keepFrom: Long): Unit = {
-    val base = readRows(spark)
-    val versioned =
-      if (base.columns.contains("__v")) base else base.withColumn("__v", lit(0L))
-    val ord =
-      if (versioned.columns.contains(versionCol))
-        Seq(col(versionCol).desc, col("__v").desc)
-      else Seq(col("__v").desc)
-    val w = Window.partitionBy(col(keyCol)).orderBy(ord: _*)
+    val versioned = withVersion(readRows(spark))
     // Rewrite ONLY the hour partitions that actually drop rows (r11
     // verdict task 5): truncation removes exactly the superseded
     // pre-keepFrom versions, so a partition is affected iff some key in
@@ -219,9 +246,7 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     val scoped = withPartitionCols(versioned)
       .join(partsDf, Seq("year", "month", "day", "hour"))
       .drop("year", "month", "day", "hour")
-    val oldWinners = scoped.filter(col("__v") <= keepFrom)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val oldWinners = winners(scoped.filter(col("__v") <= keepFrom))
     val keep = oldWinners.unionByName(scoped.filter(col("__v") > keepFrom))
     overwriteHourDirs(spark, byPartitionDirs(withPartitionCols(keep)))
   }
@@ -242,6 +267,11 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     * jobs; at 100 TB the single salted pass is also what bounds task counts. */
   private def fileSystem(spark: SparkSession) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The parquet data files directly in `dir`; none when `dir` is missing. */
+  private def parquetFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    catch { case _: FileNotFoundException => Seq.empty }
 
   private def hourDirs(spark: SparkSession): Seq[Path] = {
     val fs = fileSystem(spark)
@@ -264,8 +294,7 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     val fs = fileSystem(spark)
     hourDirs(spark).map { dir =>
       val s = partValues(dir)
-      (s"${s(0)}-${s(1)}-${s(2)} ${s(3)}",
-        fs.listStatus(dir).count(f => f.isFile && f.getPath.getName.endsWith(".parquet")))
+      (s"${s(0)}-${s(1)}-${s(2)} ${s(3)}", parquetFiles(fs, dir).length)
     }
   }
 
@@ -282,7 +311,7 @@ class KeyedParquetTable(val path: String, val keyCol: String,
     val fs = fileSystem(spark)
     // discover hour prefixes with >1 file (FeatureStoreAggregateParquet.py:52-58)
     val plan = hourDirs(spark).flatMap { dir =>
-      val files = fs.listStatus(dir).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      val files = parquetFiles(fs, dir)
       val segs0 = partValues(dir)
       if (files.length <= 1 ||
           excludeHourPrefixes.contains(s"${segs0(0)}-${segs0(1)}-${segs0(2)} ${segs0(3)}")) None

@@ -1,8 +1,11 @@
 package graft
 
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
 import graft.monitor.Alarm
 import graft.store.KeyedParquetTable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 
 /** Golden scenario 6 (FIXTURES.md §6): 2 consecutive breaches → no alarm;
   * 3 consecutive → alarm. Plus keyed-table upsert/read/compact semantics. */
@@ -85,6 +88,106 @@ class MonitoringAndStoreSpec extends SparkSpec {
     assert(served === Map(k2 -> 3L), "compaction keeps the winning tombstone")
     table.truncateHistory(spark, keepFrom = 3)
     assert(served === Map(k2 -> 3L), "truncation keeps the winning tombstone")
+  }
+
+  test("point lookup equals readLatest per key across hours, versions and __v ties") {
+    val table = new KeyedParquetTable(tmpDir("ktlook"), "tx_minute")
+    def rows(rs: (String, Long, Double)*) =
+      rs.toDF("tx_minute", "total_nb_trx_1min", "event_time")
+    val a = "2024-01-01 00:01:00"; val b = "2024-01-01 00:59:00"
+    val c = "2024-01-01 01:00:00"; val d = "2024-01-01 01:30:00"
+    table.upsert(rows((a, 1L, 100.0), (c, 1L, 100.0), (d, 1L, 100.0)), version = 0)
+    table.upsert(rows((a, 2L, 300.0), (b, 1L, 100.0), (c, 2L, 200.0)), version = 1)
+    // an older event_time never wins, even from a later upsert
+    table.upsert(rows((a, 3L, 200.0), (d, 2L, 50.0)), version = 2)
+    // same event_time second as version 1: the higher upsert sequence wins
+    table.upsert(rows((c, 3L, 200.0), (b, 2L, 150.0)), version = 3)
+
+    val latest = table.readLatest(spark)
+    for (k <- Seq(a, b, c, d)) {
+      val rec = table.getRecord(spark, k)
+      assert(rec.columns.toSet === latest.columns.toSet)
+      val cols = latest.columns.map(col)
+      assert(rec.select(cols: _*).collect().toSeq ===
+        latest.filter($"tx_minute" === k).select(cols: _*).collect().toSeq, k)
+    }
+    assert(table.getRecord(spark, a).select("total_nb_trx_1min").as[Long].collect().toSeq === Seq(2L))
+    assert(table.getRecord(spark, c).select("total_nb_trx_1min").as[Long].collect().toSeq === Seq(3L))
+  }
+
+  test("point lookup reads a same-hour tombstone file's __del column") {
+    val dir = tmpDir("ktlookdel")
+    val table = new KeyedParquetTable(s"$dir/t", "tx_minute")
+    def row(minute: String, n: Long) =
+      Seq((minute, n)).toDF("tx_minute", "total_nb_trx_1min")
+    val k1 = "2024-01-01 00:01:00"; val k2 = "2024-01-01 00:02:00"
+    table.upsert(row(k1, 5L), version = 0)
+    table.upsert(row(k2, 3L), version = 0)
+    table.deleteKeys(spark, Seq(k1).toDF("tx_minute"), version = 1)
+    val hourFiles = new java.io.File(s"$dir/t/year=2024/month=01/day=01/hour=00")
+      .listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(hourFiles.length === 3, "the tombstone sits in its own file of the hour")
+    assert(hourFiles.count(f => spark.read.parquet(f.getPath).columns.contains("__del")) === 1)
+
+    def lookup(k: String) =
+      table.getRecord(spark, k).select("total_nb_trx_1min").as[Long].collect().toSeq
+    assert(lookup(k1) === Nil, "point lookup sees the delete")
+    assert(lookup(k2) === Seq(3L))
+    table.upsert(row(k1, 9L), version = 2)
+    assert(lookup(k1) === Seq(9L), "a later re-insert beats the tombstone")
+  }
+
+  test("point lookup of an hour with no directory is empty with readLatest's columns") {
+    val table = new KeyedParquetTable(tmpDir("ktmiss"), "tx_minute")
+    table.upsert(Seq(("2024-01-01 00:01:00", 5L, 100.0))
+      .toDF("tx_minute", "total_nb_trx_1min", "event_time"), version = 0)
+    val miss = table.getRecord(spark, "2024-01-01 07:01:00")
+    assert(miss.collect().isEmpty)
+    assert(miss.columns.toSeq === table.readLatest(spark).columns.toSeq)
+  }
+
+  test("point lookup rejects a key without the yyyy-MM-dd HH prefix") {
+    val table = new KeyedParquetTable(tmpDir("ktbad"), "tx_minute")
+    table.upsert(Seq(("2024-01-01 00:01:00", 5L)).toDF("tx_minute", "total_nb_trx_1min"))
+    val e = intercept[IllegalArgumentException](table.getRecord(spark, "2024-01-01"))
+    assert(e.getMessage.contains("'2024-01-01'") && e.getMessage.contains("yyyy-MM-dd HH"))
+  }
+
+  test("point lookup runs as one Spark job with no Exchange") {
+    val table = new KeyedParquetTable(tmpDir("ktjobs"), "tx_minute")
+    def row(minute: String, n: Long, et: Double) =
+      Seq((minute, n, et)).toDF("tx_minute", "total_nb_trx_1min", "event_time")
+    val k = "2024-01-01 00:01:00"
+    table.upsert(row(k, 5L, 100.0), version = 0)
+    table.upsert(row(k, 7L, 200.0), version = 1)
+    table.deleteKeys(spark, Seq("2024-01-01 00:02:00").toDF("tx_minute"), version = 2)
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("lookup", "point lookup")
+      val df = table.getRecord(spark, k)
+      val rows = df.collect().toSeq.map(_.getAs[Long]("total_nb_trx_1min"))
+      // the listener bus delivers job starts in order: once a later job's
+      // start has arrived, every lookup job's start has too
+      sc.setJobGroup("sentinel", "listener barrier")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(groups.contains("sentinel"), "listener saw the barrier job")
+      assert(rows === Seq(7L))
+      val jobs = groups.toArray.count(_ == "lookup")
+      assert(jobs === 1, s"lookup ran $jobs Spark jobs")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"lookup plan shuffles:\n$plan")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("truncateHistory skips partitions with nothing to drop (no rewrite)") {
